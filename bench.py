@@ -368,7 +368,12 @@ def main() -> None:
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "cpus_env": os.environ.get("SPARK_GRAFT_CPUS"),
-        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        # batch width before AQE coalesces (r12 artifacts record 32 here)
+        "shuffle_partitions": spark.conf.get(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+        ),
+        # streaming state/sink width, sized to the cores by configure_session
+        "stream_state_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
     }
     queries = registry.get_queries()
 

@@ -7,9 +7,28 @@ builds a session for tests/bench with the same settings plus
 builder-only ones.
 
 Scale posture (SURVEY.md §4): AQE on (skew joins, partition coalescing),
-modest shuffle partitions for local runs (overridable — a real cluster
-would use ~2-3× total cores), UTC timezone for deterministic timestamp
-semantics, Arrow enabled for the pandas-UDF paths.
+UTC timezone for deterministic timestamp semantics, Arrow enabled for the
+pandas-UDF paths.
+
+Shuffle width has two readers, and each gets its own conf:
+
+- Batch plans start every shuffle at 32 partitions
+  (``spark.sql.adaptive.coalescePartitions.initialPartitionNum``) and AQE
+  coalesces the small ones. With AQE coalescing on, Spark's
+  ``SQLConf.numShufflePartitions`` returns that value and never reads
+  ``spark.sql.shuffle.partitions``.
+- Streaming turns AQE off inside micro-batches, so stateful operators, their
+  state store and the ``foreachBatch`` sink use
+  ``spark.sql.shuffle.partitions`` as is. ``configure_session`` sets it to
+  the session's ``defaultParallelism`` (the cores). A query records the
+  value in its offset log at its first start and restores it from there on
+  every restart: a checkpoint's state partitions are fixed for its life,
+  and a checkpoint started under another width keeps that width.
+
+Each state partition costs about 20 ``readlink``/``chmod`` process spawns
+per micro-batch on hosts without the Hadoop native library (its delta file,
+checksum sidecar, tmp+rename and ``.crc`` files), so a wider state store
+than the cores can use is paid for in CPU on every trigger.
 """
 
 from __future__ import annotations
@@ -38,10 +57,9 @@ _RUNTIME_CONFS: dict[str, str] = {
     # cover the fixture dims (region 5, nation 25, supplier 1k, part 20k,
     # customer 15k rows at sf0.1) so star joins broadcast instead of shuffle
     "spark.sql.autoBroadcastJoinThreshold": "64MB",
-    # runtime-settable: driver-provided vanilla sessions otherwise default
-    # to 200 shuffle partitions — needless scheduling overhead at test SFs
-    # (a real cluster sizes this ~2-3× total cores; AQE coalesces down)
-    "spark.sql.shuffle.partitions": "32",
+    # batch shuffle width before AQE coalesces; spark.sql.shuffle.partitions
+    # (streaming's width) is set from the cores in configure_session
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
     # maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
     # totalBytes/minPartitionNum)). Test-SF tables are single-digit MB, so
     # the default 4 MB open cost pins EVERY scan to one split — one core
@@ -89,7 +107,10 @@ def _ship_package_to_workers(spark: SparkSession) -> None:
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply the engine's runtime confs to an existing session (idempotent)."""
+    """Apply the engine's runtime confs to an existing session (idempotent).
+
+    Also sizes ``spark.sql.shuffle.partitions``, the streaming state width,
+    to ``defaultParallelism``; batch plans keep their 32-way start."""
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
@@ -98,10 +119,15 @@ def configure_session(spark: SparkSession) -> SparkSession:
             # that depend on one (io.load_table) re-check and fail loudly.
             pass
     try:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
+        )
         _ship_package_to_workers(spark)
     except Exception:
         # best-effort: on Connect-style sessions without a sparkContext
-        # the normal PYTHONPATH path still applies
+        # the session keeps its own streaming width, and the normal
+        # PYTHONPATH path still applies
         pass
     return spark
 
@@ -109,25 +135,22 @@ def configure_session(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "highload-kafka-streams-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or
-    ``local[*]``. ``shuffle_partitions`` defaults to 32 — on a real
-    cluster this should be sized to ~2-3× total executor cores / the
-    target partition size, and AQE coalesces the small ones anyway.
+    ``local[*]``. Shuffle width (see the module docstring): batch plans
+    start at 32 partitions and AQE coalesces them; streaming state gets one
+    partition per core of ``master``, fixed for a checkpoint's life at its
+    first start.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -4,6 +4,9 @@ memory sink) and assert agreement with the batch replay of the same
 topology — the TopologyTestDriver-equivalent harness.
 """
 
+import json
+import os
+import re
 import tempfile
 
 import pytest
@@ -467,6 +470,104 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_smoke, tmp_path):
         for r in ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()
     }
     assert got == want
+
+
+def _state_partitions(ckpt):
+    """Partition directories of the first stateful operator's store."""
+    return sorted(int(d) for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit())
+
+
+def _hourly_counts(b, df):
+    return (
+        b.stream(df)
+        .with_watermark("ts", "10 minutes")
+        .group_by("event_type")
+        .windowed_by(TimeWindows.of_size("1 hour"))
+        .count()
+    )
+
+
+def test_session_sizes_stream_state_to_cores(spark, sf_smoke, tmp_path):
+    """Engine defaults: streaming state is as wide as the cores, batch
+    shuffles still start 32 wide — for get_spark and for a vanilla
+    session rescued by configure_session."""
+    from highload_kafka_streams_spark.session import configure_session
+    from highload_kafka_streams_spark.streaming.sinks import write_exactly_once
+
+    cores = spark.sparkContext.defaultParallelism
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+    def widths(s):
+        return s.conf.get("spark.sql.shuffle.partitions"), s.conf.get(initial)
+
+    assert widths(spark) == (str(cores), "32")
+    vanilla = spark.newSession()
+    vanilla.conf.unset("spark.sql.shuffle.partitions")
+    vanilla.conf.unset(initial)
+    assert vanilla.conf.get("spark.sql.shuffle.partitions") == "200"
+    assert widths(configure_session(vanilla)) == (str(cores), "32")
+
+    # batch plans keep their 32-way shape; AQE coalesces at run time
+    grouped = spark.range(1000).withColumn("k", F.col("id") % 7).groupBy("k").count()
+    plan = grouped._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(k#\d+L?, 32\)", plan), plan
+
+    ev = load_table(spark, sf_smoke, "events")
+    src = str(tmp_path / "src")
+    ev.write.parquet(src)
+    ckpt = str(tmp_path / "ckpt")
+    agg = _hourly_counts(StreamsBuilder(spark), spark.readStream.schema(ev.schema).parquet(src))
+    write_exactly_once(agg.df, str(tmp_path / "sink"), ckpt, "t_state_width").awaitTermination(120)
+    assert _state_partitions(ckpt) == list(range(cores))
+
+
+def test_checkpoint_keeps_its_state_width_across_default_change(spark, sf_smoke, tmp_path):
+    """A checkpoint started under the old 32-wide default restarts under
+    the cores-sized one: Spark restores the old width from the offset log,
+    and the sink still equals one batch pass."""
+    from highload_kafka_streams_spark.session import configure_session
+    from highload_kafka_streams_spark.streaming.sinks import (
+        read_latest_per_key,
+        write_exactly_once,
+    )
+
+    ev = load_table(spark, sf_smoke, "events")
+    # split on event time so no second-half row is late for the watermark
+    split = ev.selectExpr("percentile_approx(ts, 0.5)").first()[0]
+    src, ckpt, sink = (str(tmp_path / d) for d in ("src", "ckpt", "sink"))
+    b = StreamsBuilder(spark)
+
+    def run_pass(name):
+        """Run to the end of the input; return the last offset-log entry's
+        batch id and the confs it recorded."""
+        stream = spark.readStream.schema(ev.schema).parquet(src)
+        write_exactly_once(_hourly_counts(b, stream).df, sink, ckpt, name).awaitTermination(120)
+        offsets = os.path.join(ckpt, "offsets")
+        last = max(int(f) for f in os.listdir(offsets) if f.isdigit())
+        with open(os.path.join(offsets, str(last))) as f:
+            return last, json.loads(f.read().splitlines()[1])["conf"]
+
+    # the old default; on a 32-core host that is the new one, so take 16
+    cores = spark.sparkContext.defaultParallelism
+    old_width = 32 if cores != 32 else 16
+    ev.filter(F.col("ts") < split).write.parquet(src)
+    spark.conf.set("spark.sql.shuffle.partitions", str(old_width))
+    try:
+        first, _ = run_pass("t_old_width_1")
+    finally:
+        configure_session(spark)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
+    ev.filter(F.col("ts") >= split).write.mode("append").parquet(src)
+    last, conf = run_pass("t_old_width_2")
+
+    assert last > first  # the restart ran batches of its own
+    assert conf["spark.sql.shuffle.partitions"] == str(old_width)
+    assert _state_partitions(ckpt) == list(range(old_width))
+
+    keys = ["w_start", "event_type"]
+    got = _rows(read_latest_per_key(spark, sink, keys).select(*keys, "n"), *keys)
+    want = _rows(_hourly_counts(b, ev).df.select(*keys, "n"), *keys)
+    assert got == want and len(got) > 0
 
 
 def test_dedup_dsl_stream_and_batch(spark, sf_smoke, events_stream_source):

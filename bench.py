@@ -374,6 +374,11 @@ def main() -> None:
         ),
         # streaming state/sink width, sized to the cores by configure_session
         "stream_state_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        # the file: filesystem (NioLocalFileSystem from get_spark on a local
+        # master; Hive's ProxyLocalFileSystem is the classpath default)
+        "local_fs": spark._jvm.org.apache.hadoop.fs.FileSystem.get(
+            spark._jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration()
+        ).getClass().getSimpleName(),
     }
     queries = registry.get_queries()
 

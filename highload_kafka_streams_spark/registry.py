@@ -104,7 +104,12 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     The registry is THREAD-LOCAL: harnesses that build/run queries from
     several driver threads (the parallel oracle-parity lane, guide
     §2.6) must not release each other's still-live caches — each
-    thread's build sequence manages its own."""
+    thread's build sequence manages its own.
+
+    Release is tied to building, not running: a harness that builds
+    several queries before running any loses the earlier ones' caches
+    (they recompute, results are unchanged), and the last query's caches
+    live until ``release_persists()``."""
     df.persist()
     _tracked().append(df)
     return df
@@ -122,20 +127,31 @@ def release_persists() -> None:
 
 
 def query(name: str, oracle: str | None = None):
-    """Decorator: register a query (and optionally its oracle SQL)."""
+    """Decorator: register a query (and optionally its oracle SQL).
+
+    The module-level name is bound to the same wrapper the registry holds,
+    so a direct call also releases the previous query's scoped caches. A
+    query that composes others releases once, at its outermost call: the
+    inner calls must not free caches the outer one already registered."""
 
     def deco(fn: QueryFn) -> QueryFn:
         import functools
 
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            release_persists()
-            return fn(spark, sf_dir)
+            depth = getattr(_TRACKED_PERSISTS, "depth", 0)
+            if depth == 0:
+                release_persists()
+            _TRACKED_PERSISTS.depth = depth + 1
+            try:
+                return fn(spark, sf_dir)
+            finally:
+                _TRACKED_PERSISTS.depth = depth
 
         QUERIES[name] = wrapped
         if oracle is not None:
             ORACLE[name] = oracle.strip()
-        return fn
+        return wrapped
 
     return deco
 

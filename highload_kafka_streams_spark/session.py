@@ -25,10 +25,24 @@ Shuffle width has two readers, and each gets its own conf:
   every restart: a checkpoint's state partitions are fixed for its life,
   and a checkpoint started under another width keeps that width.
 
-Each state partition costs about 20 ``readlink``/``chmod`` process spawns
-per micro-batch on hosts without the Hadoop native library (its delta file,
-checksum sidecar, tmp+rename and ``.crc`` files), so a wider state store
-than the cores can use is paid for in CPU on every trigger.
+Every trigger writes files per state partition (its delta file, checksum
+sidecar, tmp+rename and ``.crc`` files) plus offset-log, commit-log and sink
+files. On hosts without the Hadoop native library, Hadoop's local filesystem
+forks a ``chmod`` for each permission it sets and a ``readlink`` for each
+link-status lookup (``FileContext.rename`` makes four per renamed file): about
+20 spawns per state partition per micro-batch. Sessions ``get_spark`` starts
+on a local master therefore use ``hks.localfs`` (``jvm/``, built by
+``tools/build_jvm.py``) for the ``file:`` scheme: the same classes with those
+two calls made through Java NIO, so a checkpointed stream forks nothing. Both
+checksum layers stay, so ``.crc`` files and Spark's checksum sidecars are
+written and verified as before; other schemes (HDFS, S3) are untouched.
+Driver-provided sessions keep their own filesystem: a running JVM cannot take
+the jar onto its classpath. Without ``hks.localfs``, ``file:`` resolves to
+Hive's ``ProxyLocalFileSystem`` (``hive-exec`` registers it through the
+ServiceLoader). Its one change to ``LocalFileSystem``, ``rename`` onto an
+existing file returning false, is nothing the engine relies on: the checkpoint
+managers rename through ``FileContext``, and Spark's committers clear the
+destination first.
 """
 
 from __future__ import annotations
@@ -70,6 +84,15 @@ _RUNTIME_CONFS: dict[str, str] = {
     # totalBytes/minPartitionNum >> openCost, maxPartitionBytes (128 MB)
     # governs, and this setting is inert.
     "spark.sql.files.openCostInBytes": "16384",
+}
+
+# The file: filesystem of local sessions (module docstring). Launch-time only:
+# the jar must be on the JVM's classpath when it launches.
+_LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "hks-localfs.jar")
+_LOCAL_FS_CONFS: dict[str, str] = {
+    "spark.driver.extraClassPath": _LOCAL_FS_JAR,
+    "spark.hadoop.fs.file.impl": "hks.localfs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "hks.localfs.NioLocalFs",
 }
 
 
@@ -142,7 +165,10 @@ def get_spark(
     ``local[*]``. Shuffle width (see the module docstring): batch plans
     start at 32 partitions and AQE coalesces them; streaming state gets one
     partition per core of ``master``, fixed for a checkpoint's life at its
-    first start.
+    first start. On a ``local`` master, ``file:`` paths go through
+    ``hks.localfs`` (module docstring), which forks no ``chmod`` or
+    ``readlink`` per checkpoint file; that takes effect only when this call
+    starts the JVM.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -154,7 +180,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in _RUNTIME_CONFS.items():
+    confs = dict(_RUNTIME_CONFS)
+    if master.startswith("local"):
+        confs.update(_LOCAL_FS_CONFS)
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

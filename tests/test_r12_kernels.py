@@ -152,3 +152,35 @@ def test_scoped_persists_released_across_queries(spark, sf_smoke):
         assert not cm.isEmpty()  # this query's own scoped caches live
     registry.release_persists()
     assert cm.isEmpty()
+
+
+def test_direct_query_calls_release_previous_persists(spark, sf_smoke):
+    """Calling a query through its module-level name (as the composing
+    queries and the examples do) releases the previous query's scoped
+    caches just as a registry call does, and a query composed of others
+    keeps the caches it registered before its inner calls."""
+    from highload_kafka_streams_spark.plans.round6b import q_alloc_fifo_inventory, q_graph_hits
+
+    def cached(df):
+        level = df.storageLevel  # read from the JVM's cache manager
+        return level.useMemory or level.useDisk
+
+    registry.release_persists()
+    q_graph_hits(spark, sf_smoke)
+    held = list(registry._tracked())
+    assert held and all(cached(f) for f in held)
+    q_alloc_fifo_inventory(spark, sf_smoke)
+    assert not any(cached(f) for f in held)
+
+    @registry.query("_t_composed")
+    def composed(spark, sf_dir):
+        own = registry.scoped_persist(spark.range(3))
+        q_graph_hits(spark, sf_dir)
+        assert cached(own)
+        return own
+
+    try:
+        assert cached(composed(spark, sf_smoke))
+    finally:
+        registry.QUERIES.pop("_t_composed")
+        registry.release_persists()

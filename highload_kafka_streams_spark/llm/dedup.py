@@ -160,10 +160,13 @@ def minhash_signatures(
     tok_df = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
     tk = F.col("toks")  # attribute ref, not an inline split (see shingles())
     idx = F.sequence(F.lit(0), F.greatest(F.size(tk) - n, F.lit(0)))
+    # a doc shorter than n tokens (or NULL) still gets its one index-0
+    # gram: try_element_at reads past its end as NULL, which xxhash64
+    # skips, where ANSI element_at would fail the whole job
     gram_h = F.transform(
         idx,
         lambda i: F.pmod(
-            F.xxhash64(*[F.element_at(tk, i + k + 1) for k in range(n)]),
+            F.xxhash64(*[F.try_element_at(tk, i + k + 1) for k in range(n)]),
             F.lit(_MERSENNE),
         ),
     )

@@ -62,6 +62,10 @@ def kth_smallest(
         if lo == hi or n <= extract_threshold:
             break
         width = (hi - lo) / buckets
+        if width == 0.0:
+            # range too narrow to split (e.g. a few subnormal steps):
+            # the bucket division would be by zero; extract directly
+            break
         # least() clamps value==hi into the last bucket; the SAME
         # expression scopes the recursion filter, so boundary rounding
         # can never lose the target rank between passes.

@@ -35,6 +35,17 @@ pair-derivation pipelines in llm/dedup.py) now demotes its consumers
 back into the driver's verification window. Migration rule: entries
 recorded before r9 carry no ``helpers`` field and gate on the main
 hash alone until the round-end update writes one.
+
+Cost: the hashes describe the code this process imported, and they are
+computed once per code object. Each module file is read and parsed once
+(``ast.parse``); every def in it yields its normalized source (cut the
+way ``inspect.getsource`` cuts it, keyed on ``co_firstlineno``) and the
+private names it references, kept as strings and frozensets while the
+tree is dropped. Later lookups only resolve those names against the
+live modules, so ``registry.get_queries()`` pays for hashing once per
+process. Functions without a parseable module file go through
+``inspect.getsource``, once each. A module file edited on disk after
+its first parse keeps its first hashes until the next process.
 """
 
 from __future__ import annotations
@@ -45,6 +56,7 @@ import importlib
 import importlib.util
 import inspect
 import json
+import linecache
 import sys
 import textwrap
 import types
@@ -55,12 +67,139 @@ HASH_FILE = "QUERY_HASHES.json"
 _PKG_PREFIX = "highload_kafka_streams_spark"
 
 
-def _normalized_source(fn) -> str | None:
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
-        return None
+def _normalize(src: str) -> str:
     return "\n".join(line.rstrip() for line in src.splitlines()).strip()
+
+
+# A function's source facts: (name, normalized source or None, private
+# references). A reference is ``(None, 0, "_name")`` for a bare name load
+# and ``(module, level, "_name")`` for ``from <module> import _name``
+# (``level`` dots of relative import). Only strings and frozensets are
+# kept, never AST nodes: a retained tree would multiply the objects every
+# full garbage collection walks.
+_SourceInfo = tuple[str, str | None, frozenset]
+
+# module file -> {first line of each def: its _SourceInfo}, built by one
+# ast.parse per file; a def's first line is its first decorator's line,
+# which is the code object's ``co_firstlineno``
+_FILE_DEFS: dict[str, dict[int, _SourceInfo]] = {}
+# code object -> _SourceInfo for functions the file parse cannot place
+# (no source file, lambdas); these go through inspect.getsource
+_FALLBACK: dict[types.CodeType, _SourceInfo] = {}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
+# node types with no Name or ImportFrom below them
+_LEAVES = (
+    ast.expr_context, ast.Constant, ast.operator, ast.unaryop, ast.cmpop,
+    ast.boolop, ast.alias,
+)
+
+
+def _private_refs(tree: ast.AST) -> dict[ast.AST, set]:
+    """Private references of every def in ``tree`` (decorators, signature
+    and body, nested defs included), from a single pass over the tree: a
+    reference counts for each def that encloses it. Keyed by def node;
+    the tree itself, with no def around it, is keyed too."""
+    out: dict[ast.AST, set] = {tree: set()}
+    stack = [(tree, (out[tree],))]
+    while stack:
+        node, owners = stack.pop()
+        kind = type(node)
+        if kind is ast.Name:
+            if node.id.startswith("_"):
+                for refs in owners:
+                    refs.add((None, 0, node.id))
+            continue
+        if kind is ast.ImportFrom:
+            module = node.module or ""
+            if node.level or module.startswith(_PKG_PREFIX):
+                for alias in node.names:
+                    if alias.name.startswith("_"):
+                        for refs in owners:
+                            refs.add((module, node.level, alias.name))
+            continue
+        if kind in _DEFS:
+            out[node] = set()
+            owners = owners + (out[node],)
+        for field in node._fields:
+            value = getattr(node, field, None)
+            for child in value if type(value) is list else (value,):
+                if isinstance(child, ast.AST) and not isinstance(child, _LEAVES):
+                    stack.append((child, owners))
+    return out
+
+
+def _block_end(lines: list[str], node: ast.FunctionDef) -> int:
+    """Last line of ``node`` as ``inspect.getsource`` cuts it: the last
+    statement, plus the comment lines that follow it while they are
+    indented at least as deep as the body (when the body starts on its
+    own line)."""
+    last = node.end_lineno
+    first = node.body[0]
+    if lines[first.lineno - 1][: first.col_offset].strip():
+        return last  # one-line def: the block ends at its NEWLINE
+    for i in range(last, len(lines)):
+        text = lines[i].lstrip()
+        if not text:
+            continue
+        if not text.startswith("#"):
+            break
+        if len(lines[i]) - len(text) >= first.col_offset:
+            last = i + 1
+    return last
+
+
+def _parse_file(filename: str) -> dict[int, _SourceInfo]:
+    lines = linecache.getlines(filename)
+    try:
+        tree = ast.parse("".join(lines), filename)
+    except (SyntaxError, ValueError):
+        return {}
+    defs: dict[int, _SourceInfo] = {}
+    for node, refs in _private_refs(tree).items():
+        if type(node) in _DEFS:
+            first = (node.decorator_list or [node])[0].lineno
+            src = _normalize("".join(lines[first - 1 : _block_end(lines, node)]))
+            defs[first] = (node.name, src, frozenset(refs))
+    return defs
+
+
+def _inspect_info(fn) -> _SourceInfo:
+    name = getattr(fn, "__name__", "")
+    try:
+        src = _normalize(inspect.getsource(fn))
+    except (OSError, TypeError):
+        return (name, None, frozenset())
+    try:
+        tree = ast.parse(textwrap.dedent(src))
+    except SyntaxError:
+        return (name, src, frozenset())
+    return (name, src, frozenset(_private_refs(tree)[tree]))
+
+
+def _source_info(fn) -> _SourceInfo:
+    """Source facts of ``fn`` (seen through ``functools.wraps``), computed
+    once per code object for the life of the process."""
+    fn = inspect.unwrap(fn)
+    code = getattr(fn, "__code__", None)
+    if not isinstance(code, types.CodeType):
+        return _inspect_info(fn)
+    # two threads may both parse a file on first use; they store equal
+    # results, so the race costs time only
+    defs = _FILE_DEFS.get(code.co_filename)
+    if defs is None:
+        defs = _FILE_DEFS[code.co_filename] = _parse_file(code.co_filename)
+    info = defs.get(code.co_firstlineno)
+    if info is not None and info[0] == code.co_name:
+        return info
+    info = _FALLBACK.get(code)
+    if info is None:
+        info = _FALLBACK[code] = _inspect_info(fn)
+    return info
+
+
+def _normalized_source(fn) -> str | None:
+    return _source_info(fn)[1]
 
 
 def _referenced_private_fns(fn) -> dict[str, types.FunctionType]:
@@ -70,62 +209,51 @@ def _referenced_private_fns(fn) -> dict[str, types.FunctionType]:
     statements inside the body (the cross-module pattern the plans
     modules use; relative imports resolve against the function's own
     package). Unresolvable sources return {} — the main hash still
-    covers the function itself.
+    covers the function itself. The names come from the memoized source
+    facts; only their resolution to live objects runs on every call.
 
     Coverage limit (documented, r9 advisor): ONLY ``_``-prefixed
     FunctionType references are in the closure. Public helpers
     (``duplicate_clusters``, ``memo_parquet``) and module constants are
     outside both hashes — changes there rely on the consumer's own
     source or the round-end review to re-enter the window."""
-    src = _normalized_source(fn)
+    _, src, refs = _source_info(fn)
     if src is None:
-        return {}
-    try:
-        tree = ast.parse(textwrap.dedent(src))
-    except SyntaxError:
         return {}
     mod = sys.modules.get(getattr(fn, "__module__", ""), None)
     mod_globals = getattr(mod, "__dict__", {})
     found: dict[str, types.FunctionType] = {}
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom):
-            if node.level == 0:
-                if not (node.module or "").startswith(_PKG_PREFIX):
-                    continue
-                target = node.module
-            else:
-                # relative import: resolve against the module the function
-                # actually lives in (r9 advisor: importing the top package
-                # instead silently dropped `from .dedup import _helper`
-                # helpers from the closure — the exact blind spot the
-                # helpers hash exists to close)
-                pkg = getattr(mod, "__package__", None) or getattr(
-                    fn, "__module__", ""
-                ).rpartition(".")[0]
-                try:
-                    target = importlib.util.resolve_name(
-                        "." * node.level + (node.module or ""), pkg
-                    )
-                except (ImportError, ValueError):
-                    continue
-                if not target.startswith(_PKG_PREFIX):
-                    continue
-            try:
-                src_mod = importlib.import_module(target)
-            except ImportError:
-                continue
-            for alias in node.names:
-                if not alias.name.startswith("_"):
-                    continue
-                obj = getattr(src_mod, alias.name, None)
-                if isinstance(obj, types.FunctionType):
-                    found[f"{obj.__module__}.{obj.__qualname__}"] = obj
-        elif isinstance(node, ast.Name) and node.id.startswith("_"):
-            obj = mod_globals.get(node.id)
+    for module, level, ident in refs:
+        if module is None:
+            obj = mod_globals.get(ident)
             if isinstance(obj, types.FunctionType) and getattr(
                 obj, "__module__", ""
             ).startswith(_PKG_PREFIX):
                 found[f"{obj.__module__}.{obj.__qualname__}"] = obj
+            continue
+        target = module
+        if level:
+            # relative import: resolve against the module the function
+            # actually lives in (r9 advisor: importing the top package
+            # instead silently dropped `from .dedup import _helper`
+            # helpers from the closure — the exact blind spot the
+            # helpers hash exists to close)
+            pkg = getattr(mod, "__package__", None) or getattr(
+                fn, "__module__", ""
+            ).rpartition(".")[0]
+            try:
+                target = importlib.util.resolve_name("." * level + module, pkg)
+            except (ImportError, ValueError):
+                continue
+            if not target.startswith(_PKG_PREFIX):
+                continue
+        try:
+            src_mod = importlib.import_module(target)
+        except ImportError:
+            continue
+        obj = getattr(src_mod, ident, None)
+        if isinstance(obj, types.FunctionType):
+            found[f"{obj.__module__}.{obj.__qualname__}"] = obj
     found.pop(f"{fn.__module__}.{fn.__qualname__}", None)
     return found
 
@@ -158,15 +286,15 @@ def content_hash(fn, oracle: str | None) -> str:
     """Hash of a query implementation: normalized function source
     (trailing-whitespace-insensitive, so formatting churn does not force
     re-verification) + the registered oracle SQL."""
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
+    norm = _normalized_source(fn)
+    if norm is None:
         # dynamically-created callable: fall back to stable code-object
         # facets (bytecode + consts repr) so the hash still moves when
         # behavior does
         code = getattr(fn, "__code__", None)
-        src = repr((getattr(code, "co_code", b""), getattr(code, "co_consts", ())))
-    norm = "\n".join(line.rstrip() for line in src.splitlines()).strip()
+        norm = _normalize(
+            repr((getattr(code, "co_code", b""), getattr(code, "co_consts", ())))
+        )
     h = hashlib.sha256()
     h.update(norm.encode("utf-8"))
     h.update(b"\x00")

@@ -16,6 +16,12 @@ Usage in operator modules::
 
 Queries without an oracle string (streaming-only / engine-specific-hash
 semantics, SURVEY.md §2 tier 🌊) get the driver's rows-only check.
+
+``get_queries()`` / ``get_oracle_sql()`` order the names on every call
+from the driver's evidence files, which are re-read each time, and from
+the content hashes of the code this process imported, which ``qhash``
+computes once per code object. A repeat lookup therefore costs a few
+file reads, not a re-hash of every query's source.
 """
 
 from __future__ import annotations

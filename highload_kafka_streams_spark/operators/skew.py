@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.compat import dsum, dsum_sql
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 
 def salted_agg_sum(
@@ -307,7 +307,7 @@ def q_shuffle_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = o.groupBy(F.col("o_custkey").alias("k")).agg(
         F.count("*").cast("long").alias("cnt")
     )
-    freq = freq.persist()
+    freq = scoped_persist(freq)
     tot = freq.agg(
         F.sum("cnt").cast("long").alias("total"),
         F.count("*").cast("long").alias("n_keys"),

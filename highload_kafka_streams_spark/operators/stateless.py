@@ -50,8 +50,9 @@ def select_key(df: DataFrame, key: Column, key_name: str = "key") -> DataFrame:
 def branch(df: DataFrame, **preds: Column) -> dict[str, DataFrame]:
     """KS KStream#split/Branched — route to N streams by first-match predicate.
 
-    Caller should ``df.cache()`` the parent when consuming several
-    branches in one job, mirroring KS's single-pass routing.
+    A query consuming several branches in one job should
+    ``registry.scoped_persist`` the parent, mirroring KS's single-pass
+    routing.
     """
     out: dict[str, DataFrame] = {}
     taken: Column | None = None

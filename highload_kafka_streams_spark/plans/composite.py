@@ -670,14 +670,16 @@ def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort. Recency keys on epoch days so the cut points stay integral."""
     o = load_table(spark, sf_dir, "orders")
 
-    per_cust = o.groupBy("o_custkey").agg(
-        F.max("o_orderdate").alias("last_order"),
-        F.count("*").alias("frequency"),
-        dsum(F.col("o_totalprice"), "monetary"),
-    ).withColumn(
-        "last_order_days",
-        F.datediff("last_order", F.lit("1970-01-01")).cast("long"),
-    ).persist()
+    per_cust = scoped_persist(
+        o.groupBy("o_custkey").agg(
+            F.max("o_orderdate").alias("last_order"),
+            F.count("*").alias("frequency"),
+            dsum(F.col("o_totalprice"), "monetary"),
+        ).withColumn(
+            "last_order_days",
+            F.datediff("last_order", F.lit("1970-01-01")).cast("long"),
+        )
+    )
     scored = _exact_ntile_desc(
         per_cust, "last_order_days", "o_custkey", "r_score"
     )
@@ -904,12 +906,14 @@ def q_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_part = li.groupBy("l_partkey").agg(
         dsum(F.col("l_extendedprice"), "revenue_raw")
     )
-    fx = per_part.select(
-        "l_partkey",
-        F.floor(F.col("revenue_raw") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("rev_c"),
-    ).persist()
+    fx = scoped_persist(
+        per_part.select(
+            "l_partkey",
+            F.floor(F.col("revenue_raw") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("rev_c"),
+        )
+    )
     n_buckets = 32
     cuts = fx.agg(
         F.percentile_approx(
@@ -1280,7 +1284,7 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < "1996-04-01")
     )
     supp = load_table(spark, sf_dir, "supplier")
-    revenue = (
+    revenue = scoped_persist(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
             F.sum(
@@ -1290,7 +1294,6 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("long")
             ).alias("total_rev_fp")
         )
-        .persist()
     )
     mx = revenue.agg(F.max("total_rev_fp").alias("max_rev_fp"))
     return (
@@ -1793,11 +1796,10 @@ def q_tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s_suppkey") == F.col("l_suppkey"),
         "left_semi",
     )
-    pv = (
+    pv = scoped_persist(
         _derived_partsupp(li_euro)
         .groupBy("ps_partkey")
         .agg(F.sum(F.col("ps_cost_fp") * F.col("ps_qty")).alias("value_fp"))
-        .persist()
     )
     tot = pv.agg(
         F.sum("value_fp").alias("total_fp"),
@@ -2046,7 +2048,7 @@ def q_basket_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
         .distinct()
     )
-    ob = ob.persist()
+    ob = scoped_persist(ob)
     n_orders = ob.agg(F.count_distinct("o").alias("n"))
     brand_n = ob.groupBy("b").agg(F.count("*").alias("nb"))
     a, c = ob.alias("a"), ob.alias("c")
@@ -2263,7 +2265,7 @@ def q_alloc_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rev_fp")
         )
     )
-    rev = rev.persist()
+    rev = scoped_persist(rev)
     # quota basis = whole revenue units (fp DIV 1e4): keeps units·rev_u
     # inside int64 at any realistic scale (rev_fp·1e6 overflows at sf0.1
     # density already — caught by the two-density sweep)
@@ -2353,7 +2355,7 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rev_fp")
         )
     )
-    grp = grp.persist()
+    grp = scoped_persist(grp)
     per_bal = grp.groupBy("bal_c").agg(F.max("rev_fp").alias("bal_max_rev"))
     per_bal = per_bal.withColumn(
         "bkt", F.floor(F.col("bal_c") / 65536).cast("long")
@@ -2709,7 +2711,7 @@ def q_basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("o"), F.col("p_brand").alias("b"))
         .distinct()
     )
-    ob = ob.persist()
+    ob = scoped_persist(ob)
     ms = ob.agg(
         F.count_distinct("o").alias("n_orders"),
         F.expr("count(DISTINCT o) * 35 DIV 10000").alias("minsup"),
@@ -2736,7 +2738,7 @@ def q_basket_triples_apriori(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nxy") >= F.col("minsup"))
         .select("x", "y")
     )
-    l2 = l2.persist()
+    l2 = scoped_persist(l2)
     # C3: Apriori candidate join — shared prefix + downward closure
     p1, p2 = l2.alias("p1"), l2.alias("p2")
     c3 = (
@@ -3113,7 +3115,7 @@ def q_alloc_water_filling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").over(wall).cast("long").alias("n"),
         F.expr("(CAST(SUM(d) OVER () AS BIGINT) * 9) DIV 10").alias("b"),
     )
-    ranked = ranked.persist()
+    ranked = scoped_persist(ranked)
     kstar = ranked.filter(
         F.col("pfx") + (F.col("n") - F.col("rn")) * F.col("d")
         <= F.col("b")

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 
 @query(
@@ -906,7 +906,7 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(0).alias("is_new"),
     )
     sess = marked.withColumn("sid", F.sum("is_new").over(w))
-    st = sess.select("user_id", "sid", "event_type").distinct().persist()
+    st = scoped_persist(sess.select("user_id", "sid", "event_type").distinct())
     totals = st.select("user_id", "sid").distinct().agg(
         F.count("*").alias("n_sessions")
     )
@@ -1467,7 +1467,7 @@ def q_eval_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp = scored.groupBy("s").agg(
         F.count("*").alias("cnt"), F.sum("y").alias("pos")
     )
-    grp = grp.withColumn("b", F.floor(F.col("s") / 16).cast("long")).persist()
+    grp = scoped_persist(grp.withColumn("b", F.floor(F.col("s") / 16).cast("long")))
     from pyspark.sql.window import Window
 
     w_in = (
@@ -1579,7 +1579,7 @@ def q_ts_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.size("w") == 24)
     )
-    full_w = full_w.persist()
+    full_w = scoped_persist(full_w)
     qw = (
         full_w.filter(F.col("event_type") == "purchase")
         .orderBy(F.col("w_start").desc())
@@ -1731,7 +1731,7 @@ def q_events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     du = ev.select(
         F.date_trunc("day", F.col("ts")).alias("day"), "user_id"
     ).distinct()
-    du = du.persist()
+    du = scoped_persist(du)
     dau = du.groupBy("day").agg(F.count("*").alias("dau"))
     cover = du.select(
         F.explode(F.sequence(F.lit(0), F.lit(6))).alias("o"),
@@ -2111,7 +2111,7 @@ def q_time_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         ).alias("x")
     )
-    hourly = hourly.persist()
+    hourly = scoped_persist(hourly)
     st = hourly.agg(
         F.sum("x").alias("s"), F.count("*").alias("n")
     )
@@ -2122,7 +2122,7 @@ def q_time_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("x") - F.expr("(s - s % n) DIV n")).alias("d"),
         )
     )
-    ctr = ctr.persist()
+    ctr = scoped_persist(ctr)
     den = ctr.agg(F.sum(F.col("d") * F.col("d")).cast("long").alias("den"))
     lags = spark.range(1, 7).select(F.col("id").alias("lag"))
     a = ctr.select(F.col("hsec"), F.col("d").alias("da"))
@@ -2230,7 +2230,7 @@ def q_time_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         ).alias("v")
     )
-    hourly = hourly.persist()
+    hourly = scoped_persist(hourly)
     daily = hourly.groupBy(F.expr("x DIV 24").alias("day")).agg(
         F.sum("x").alias("sx"), F.sum("v").alias("sv"), F.count("*").alias("n")
     )
@@ -2621,7 +2621,7 @@ def q_events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = ev.groupBy("user_id", "event_type").agg(
         F.count("*").cast("long").alias("c")
     )
-    c = c.persist()
+    c = scoped_persist(c)
     n = c.groupBy("user_id").agg(F.sum("c").alias("n"))
     lnfx = lambda col: F.floor(
         F.log(F.col(col).cast("double")) * 1000000
@@ -2781,7 +2781,7 @@ def q_time_sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
         ).alias("v")
     )
-    hourly = hourly.persist()
+    hourly = scoped_persist(hourly)
     rk = hourly.select(
         "v",
         F.row_number().over(Window.orderBy("v")).alias("rn"),
@@ -3522,7 +3522,7 @@ def q_time_stl_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
             (7 * F.col("v") - F.col("trend7")).alias("det7"),
         )
     )
-    det = det.persist()
+    det = scoped_persist(det)
     seas = det.groupBy("dow").agg(
         F.sum("det7").cast("long").alias("s_num"),
         F.count("*").cast("long").alias("s_cnt"),
@@ -3664,7 +3664,7 @@ def q_eval_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
         ).alias("v")
     )
-    daily = daily.persist()
+    daily = scoped_persist(daily)
     a, f = daily.alias("a"), daily.alias("f")
     paired = a.join(f, F.col("f.d") == F.col("a.d") - 7).select(
         (F.col("a.d") % 7).alias("dow"),

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 # KMV sketch: k minimum md5 values per group; estimate from the k-th
 # minimum's position in the 48-bit prefix space (12 hex chars — exact in
@@ -612,7 +612,7 @@ def q_er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # k feeds the neighbor window and BOTH verify join-backs — persist
     # so normalization/tokenization runs once
-    k = k.persist()
+    k = scoped_persist(k)
     w = Window.partitionBy(F.substring("skey", 1, 4)).orderBy(
         "skey", "doc_id"
     )
@@ -863,12 +863,10 @@ def q_text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     mins = F.transform(
         widx, lambda i: F.array_min(F.slice(gcol, i + 1, WINNOW_W))
     )
-    fp = (
-        gh.select("doc_id", F.explode(mins).alias("fp"))
-        .distinct()
-        # referenced by the frequency cap AND both sides of the pair
-        # join — persist so gram hashing runs once, not four times
-        .persist()
+    # referenced by the frequency cap AND both sides of the pair join —
+    # persist so gram hashing runs once, not four times
+    fp = scoped_persist(
+        gh.select("doc_id", F.explode(mins).alias("fp")).distinct()
     )
     freq = fp.groupBy("fp").count().filter(
         F.col("count") <= WINNOW_HUB_CAP
@@ -1872,7 +1870,7 @@ def q_time_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day")
         .agg(F.expr("CAST(SUM(cents) DIV 100 AS BIGINT)").alias("x"))
     )
-    s = s.persist()
+    s = scoped_persist(s)
     ndays = s.agg(F.count("*").cast("long").alias("nd"))
     sizes = spark.createDataFrame([(v,) for v in RS_SIZES], "sgs long")
     seg = (

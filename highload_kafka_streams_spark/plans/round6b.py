@@ -996,9 +996,9 @@ def q_agg_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(s_fr >= s_es, "fr")
         .otherwise("es")
     )
-    labeled = d.select(
-        "source", F.col("lang").alias("actual"), pred.alias("pred")
-    ).persist()
+    labeled = scoped_persist(
+        d.select("source", F.col("lang").alias("actual"), pred.alias("pred"))
+    )
     n = labeled.groupBy("source").agg(
         F.count("*").alias("n"),
         F.sum(
@@ -1411,7 +1411,7 @@ def q_events_littles_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             1,
         ).otherwise(0),
     )
-    sess = (
+    sess = scoped_persist(
         gapped.withColumn(
             "sid",
             F.sum("new_s")
@@ -1420,7 +1420,6 @@ def q_events_littles_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id", "sid")
         .agg(F.min("t").alias("s"), F.max("t").alias("e"))
-        .persist()
     )
     bounds = sess.agg(
         F.expr("min(s) DIV 3600000000").alias("h0"),
@@ -1878,15 +1877,17 @@ def q_eval_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("c").alias("x"))
     )
     a, f7 = daily.alias("a"), daily.alias("f")
-    paired = a.join(
-        f7,
-        (F.col("f.event_type") == F.col("a.event_type"))
-        & (F.col("f.d") == F.col("a.d") - 7),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        F.col("a.d").alias("d"),
-        (F.col("a.x") - F.col("f.x")).alias("diff"),
-    ).persist()
+    paired = scoped_persist(
+        a.join(
+            f7,
+            (F.col("f.event_type") == F.col("a.event_type"))
+            & (F.col("f.d") == F.col("a.d") - 7),
+        ).select(
+            F.col("a.event_type").alias("event_type"),
+            F.col("a.d").alias("d"),
+            (F.col("a.x") - F.col("f.x")).alias("diff"),
+        )
+    )
     obs = paired.groupBy("event_type").agg(
         F.count("*").alias("n_pairs"),
         F.abs(F.sum("diff")).alias("t_obs"),
@@ -2014,15 +2015,17 @@ def q_embed_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded) table, never a corpus-sized one. At extreme n the fixed
     scale shrinks per compat.py's documented knob."""
     emb = load_table(spark, sf_dir, "embeddings")
-    xf = emb.select(
-        "vec_id", F.posexplode("embedding").alias("dim", "xv")
-    ).select(
-        "vec_id",
-        "dim",
-        F.expr(
-            f"CAST(FLOOR(CAST(xv AS DOUBLE) * {_PI_SCALE} + 0.5) AS BIGINT)"
-        ).alias("x"),
-    ).persist()
+    xf = scoped_persist(
+        emb.select(
+            "vec_id", F.posexplode("embedding").alias("dim", "xv")
+        ).select(
+            "vec_id",
+            "dim",
+            F.expr(
+                f"CAST(FLOOR(CAST(xv AS DOUBLE) * {_PI_SCALE} + 0.5) AS BIGINT)"
+            ).alias("x"),
+        )
+    )
 
     def norm(df: DataFrame) -> DataFrame:
         mx = df.agg(F.max(F.abs(F.col("v"))).alias("mx"))
@@ -2031,11 +2034,13 @@ def q_embed_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     s1 = xf.groupBy("vec_id").agg(F.sum("x").alias("s"))
-    v1 = norm(
-        xf.join(s1, "vec_id")
-        .groupBy("dim")
-        .agg(F.sum(F.col("x") * F.col("s")).alias("v"))
-    ).persist()
+    v1 = scoped_persist(
+        norm(
+            xf.join(s1, "vec_id")
+            .groupBy("dim")
+            .agg(F.sum(F.col("x") * F.col("s")).alias("v"))
+        )
+    )
     s2 = (
         xf.join(F.broadcast(v1), "dim")
         .groupBy("vec_id")

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 # Candidate keys audited by q_dq_uniqueness_profile:
 # (name, table, [columns]) — true keys, a near-key, and a non-key.
@@ -402,9 +402,11 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
     )
     rt = c.groupBy("src").agg(F.sum("n").alias("tot"))
-    p = c.join(rt, "src").select(
-        "src", "dst", F.expr("(n * 1000000) DIV tot").alias("p_fx")
-    ).persist()
+    p = scoped_persist(
+        c.join(rt, "src").select(
+            "src", "dst", F.expr("(n * 1000000) DIV tot").alias("p_fx")
+        )
+    )
     k = p.select("src").distinct().agg(F.count("*").alias("k"))
     v0 = (
         p.select("src")
@@ -425,7 +427,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumnRenamed("node2", "node")
         )
 
-    v1 = step(v0).persist()
+    v1 = scoped_persist(step(v0))
     v2 = step(v1)
     return (
         v1.withColumnRenamed("v", "p1_fx")
@@ -654,12 +656,11 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from highload_kafka_streams_spark.llm.dedup import _affinity_pairs
 
     pairs = _affinity_pairs(spark, sf_dir)
-    sym = (
+    sym = scoped_persist(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .unionAll(
             pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
         )
-        .persist()
     )
     frontier = sym.select(F.col("u").alias("start")).distinct().select(
         "start", F.col("start").alias("cur")
@@ -1074,9 +1075,11 @@ def q_multimodal_alignment_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS BIGINT)"
         ).alias("b"),
     )
-    j = d.join(nrm, d["doc_id"] == nrm["vec_id"], "full").select(
-        "doc_id", F.col("n_chars").alias("a"), "vec_id", "b"
-    ).persist()
+    j = scoped_persist(
+        d.join(nrm, d["doc_id"] == nrm["vec_id"], "full").select(
+            "doc_id", F.col("n_chars").alias("a"), "vec_id", "b"
+        )
+    )
     counts = j.agg(
         F.sum(
             F.when(
@@ -1280,9 +1283,9 @@ def q_window_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     wuo = Window.partitionBy("user_id").orderBy("t").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    sess = marked.withColumn(
-        "sid", F.sum("new_s").over(wuo).cast("long")
-    ).persist()
+    sess = scoped_persist(
+        marked.withColumn("sid", F.sum("new_s").over(wuo).cast("long"))
+    )
     per_sess = sess.groupBy("user_id", "sid").agg(
         F.count("*").alias("n_events"),
         F.expr("CAST((max(t) - min(t)) DIV 1000000 AS BIGINT)").alias(

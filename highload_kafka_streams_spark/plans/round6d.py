@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 from highload_kafka_streams_spark.llm.similarity import _DOT_SQL, cosine
 
 # ---------------------------------------------------------------------------
@@ -1240,13 +1240,15 @@ def q_time_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wp = Window.partitionBy("l_partkey").orderBy("day")
     wd = Window.partitionBy("l_partkey").orderBy(F.col("day").desc())
-    occ = daily.select(
-        "l_partkey",
-        "day",
-        "z",
-        (F.col("day") - F.lag("day").over(wp)).alias("p"),
-        F.row_number().over(wd).alias("rdesc"),
-    ).persist()
+    occ = scoped_persist(
+        daily.select(
+            "l_partkey",
+            "day",
+            "z",
+            (F.col("day") - F.lag("day").over(wp)).alias("p"),
+            F.row_number().over(wd).alias("rdesc"),
+        )
+    )
     wexpr = (
         f"CAST(1 AS BIGINT) << ({_CROSTON_TAPS} - 1 - (rdesc - 1))"
     )
@@ -1425,17 +1427,19 @@ def q_multimodal_phash_dct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc, smaller than the Generate's per-row overhead. (The same
     # barrier PAYS in q_multimodal_ahash_buckets, where the refold is
     # 32×32 per doc and the signature lineage feeds a self-join.)
-    sig = co.select(
-        "doc_id",
-        "channel",
-        F.expr(
-            "CAST(aggregate(sequence(0, 14), CAST(0 AS BIGINT),"
-            " (acc, b) -> acc + CASE WHEN element_at(c, b + 1) * 15"
-            " >= aggregate(c, CAST(0 AS BIGINT), (a, v) -> a + v)"
-            " THEN shiftleft(CAST(1 AS BIGINT), b) ELSE CAST(0 AS BIGINT)"
-            " END) AS BIGINT)"
-        ).alias("h"),
-    ).persist()
+    sig = scoped_persist(
+        co.select(
+            "doc_id",
+            "channel",
+            F.expr(
+                "CAST(aggregate(sequence(0, 14), CAST(0 AS BIGINT),"
+                " (acc, b) -> acc + CASE WHEN element_at(c, b + 1) * 15"
+                " >= aggregate(c, CAST(0 AS BIGINT), (a, v) -> a + v)"
+                " THEN shiftleft(CAST(1 AS BIGINT), b) ELSE CAST(0 AS BIGINT)"
+                " END) AS BIGINT)"
+            ).alias("h"),
+        )
+    )
     per_sig = sig.groupBy("channel", "h").agg(F.count("*").alias("cnt"))
     wch = Window.partitionBy("channel").orderBy(F.col("cnt").desc(), "h")
     top = (
@@ -1539,13 +1543,12 @@ def q_agg_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of row count. The driver runs the fixed round loop
     (bounded-iteration precedent: GS matching, PageRank)."""
     cust = load_table(spark, sf_dir, "customer")
-    w = (
+    w = scoped_persist(
         cust.groupBy(
             F.col("c_nationkey").alias("rk"),
             F.col("c_mktsegment").alias("ck"),
         )
         .agg((F.count("*") * _IPF_FX).cast("long").alias("w"))
-        .persist()
     )
     tot = w.agg(
         F.sum("w").cast("long").alias("t"),

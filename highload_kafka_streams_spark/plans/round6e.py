@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 # DuckDB twin of Spark's conv(hex, 16, 10) over a 12-char (48-bit)
 # prefix — the q_agg_kmv_distinct recipe.
@@ -201,10 +201,10 @@ def q_agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    ha = hset("1-URGENT").persist()
-    hb = hset("2-HIGH").persist()
-    sa = ha.orderBy("hx").limit(_KMVS_K).persist()
-    sb = hb.orderBy("hx").limit(_KMVS_K).persist()
+    ha = scoped_persist(hset("1-URGENT"))
+    hb = scoped_persist(hset("2-HIGH"))
+    sa = scoped_persist(ha.orderBy("hx").limit(_KMVS_K))
+    sb = scoped_persist(hb.orderBy("hx").limit(_KMVS_K))
     su = (
         sa.unionByName(sb)
         .distinct()
@@ -345,7 +345,7 @@ def q_eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y"),
     )
-    b = (
+    b = scoped_persist(
         f.groupBy(
             # integer DIV, never float-divide-then-cast: a double
             # quotient at an exact bin boundary can land below the
@@ -363,7 +363,6 @@ def q_eval_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("sq_k"),
         )
-        .persist()
     )
     g = b.agg(
         F.sum("n_k").cast("long").alias("n"),
@@ -484,10 +483,9 @@ def q_time_acf_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = spine.agg(
         F.expr(f"CAST(SUM(v) DIV {_ACF_LEN} AS BIGINT)").alias("mu")
     )
-    d = (
+    d = scoped_persist(
         spine.crossJoin(F.broadcast(mu))
         .select("idx", (F.col("v") - F.col("mu")).alias("d"))
-        .persist()
     )
     den = d.agg(F.sum(F.col("d") * F.col("d")).cast("long").alias("den"))
     b = d.select(F.col("idx").alias("b_idx"), F.col("d").alias("b_d"))

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 # DuckDB twin of Spark's conv(hex, 16, 10) over a 12-char (48-bit)
 # prefix — the q_agg_kmv_distinct recipe.
@@ -245,12 +245,11 @@ def q_eval_roc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.when(F.col("o_orderstatus") == "F", 400000).otherwise(0)
         ).alias("score"),
     )
-    bk = (
+    bk = scoped_persist(
         s.groupBy(
             F.expr(f"score DIV {_ROC_BUCKET}").alias("bucket"), "y"
         )
         .agg(F.count("*").alias("cnt"))
-        .persist()
     )
     tot = bk.agg(
         F.sum(F.when(F.col("y") == 1, F.col("cnt")).otherwise(0))
@@ -493,11 +492,13 @@ def q_agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y"),
         )
     )
-    idx = cell.select(
-        F.row_number().over(Window.orderBy("nk", "seg")).alias("i"),
-        "x",
-        "y",
-    ).persist()
+    idx = scoped_persist(
+        cell.select(
+            F.row_number().over(Window.orderBy("nk", "seg")).alias("i"),
+            "x",
+            "y",
+        )
+    )
     b = idx.select(
         F.col("i").alias("j"), F.col("x").alias("bx"), F.col("y").alias("by")
     )

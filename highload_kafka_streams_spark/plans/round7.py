@@ -1573,10 +1573,9 @@ def q_time_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = spine.groupBy("event_type").agg(
         F.expr(f"CAST(SUM(v) DIV {_LB_DAYS} AS BIGINT)").alias("mu")
     )
-    d = (
+    d = scoped_persist(
         spine.join(F.broadcast(m), "event_type")
         .select("event_type", "idx", (F.col("v") - F.col("mu")).alias("d"))
-        .persist()
     )
     den = d.groupBy("event_type").agg(
         F.sum(F.col("d") * F.col("d")).cast("long").alias("den")

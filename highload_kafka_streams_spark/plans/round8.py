@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 # ---------------------------------------------------------------------------
 # q_select_dsir_importance — hashed-unigram importance weighting (DSIR-shaped)
@@ -373,7 +373,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     brand = part.select(
         F.col("p_partkey").alias("pk"), F.col("p_brand").alias("brand")
     )
-    cells = (
+    cells = scoped_persist(
         edges.join(
             F.broadcast(brand.select(F.col("pk"), F.col("brand").alias("ca"))),
             F.col("pk") == F.col("pa"),
@@ -385,7 +385,6 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("ca", "cb")
         .agg(F.count("*").cast("long").alias("cnt"))
-        .persist()
     )
     m = cells.agg(F.sum("cnt").cast("long").alias("m"))
     intra = (

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 # ---------------------------------------------------------------------------
 # q_agg_quantile_sketch_mergeable — hash-sampled fixed-point quantile sketch
@@ -297,8 +297,8 @@ def q_dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = sh.groupBy("g").agg(
         F.expr("CAST(1000000 DIV count(*) AS BIGINT)").alias("w_fx")
     )
-    shw = sh.join(w, "g").select("doc_id", "lang", "g", "w_fx").persist()
-    shw.count()  # materialize: 3 consumers (totals + both pair sides)
+    shw = scoped_persist(sh.join(w, "g").select("doc_id", "lang", "g", "w_fx"))
+    shw.count()  # fill shw (3 consumers) before sh, its input, is freed
     sh.unpersist()
     sw = shw.groupBy("doc_id").agg(F.sum("w_fx").cast("long").alias("sw"))
     a, b = shw.alias("a"), shw.alias("b")

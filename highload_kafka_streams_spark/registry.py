@@ -79,19 +79,18 @@ _QUERY_MODULES = (
 
 
 # --------------------------------------------------------------------------
-# Scoped persist tracking (r12, guide §5: "unpersist when done").
+# Caching rule: every cache a query builder or engine helper makes lives
+# as long as its query. A frame that two or more branches read is cached
+# with ``scoped_persist`` and released when the next query builds (or at
+# ``release_persists()``), so a long-lived session holds one query's
+# caches at a time. Releasing never changes a result: lineage recomputes
+# a dropped partition. The query's own run fills its caches; no builder
+# runs a ``count()`` just to fill one.
 #
-# Several query builders persist() a bounded intermediate that two or more
-# branches of the SAME query consume (hits' score tables, ahash's banded
-# table, q2's eligible rollup, ...). Each cache is correct and wins its
-# A/B, but the frames were never released: a long-lived driver session
-# executing many queries sequentially accumulated storage-pool residue
-# (r11 verdict item 7 / advice item 2). Builders now register those
-# frames through ``scoped_persist``; building the NEXT query releases
-# every frame the previous one registered — by then the previous query's
-# result has been materialized (the driver and the bench both fully
-# consume each query before the next), and unpersist is always
-# semantics-safe anyway (an unpersisted frame recomputes, never errs).
+# The exception is a cache shorter than its query that the same function
+# unpersists: per-round tables of a driver-side loop, or an input freed
+# once the next table is built (there a ``count()`` materializes the new
+# frame first). ``tests/test_cache_lifetime.py`` checks the rule.
 # --------------------------------------------------------------------------
 
 _TRACKED_PERSISTS = threading.local()
@@ -105,7 +104,7 @@ def _tracked() -> list[DataFrame]:
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
-    """``persist()`` + register for release when the next query builds.
+    """Cache ``df`` until the next query builds (the caching rule above).
 
     The registry is THREAD-LOCAL: harnesses that build/run queries from
     several driver threads (the parallel oracle-parity lane, guide

@@ -25,7 +25,7 @@ from pyspark.sql.types import (
 
 from highload_kafka_streams_spark.compat import dsum, dsum_sql
 from highload_kafka_streams_spark.io import load_table
-from highload_kafka_streams_spark.registry import query
+from highload_kafka_streams_spark.registry import query, scoped_persist
 
 _SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -263,7 +263,7 @@ def q_source_csv_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data columns is the documented Spark contract for corrupt-record
     # queries (SPARK-21610: the pushed-down internal parser cannot
     # prove corrupt-only projections otherwise)
-    back = back.cache()
+    back = scoped_persist(back)
     return back.agg(
         F.count(F.when(F.col("_corrupt").isNull(), 1))
         .cast("long")

@@ -27,11 +27,17 @@ def test_all_queries_run_at_smoke_sf(spark, sf_smoke):
     # r12 lane split (verdict item 1): ~6 min of serial per-query fixed
     # action cost — slowlane by default; the fast lane keeps the
     # 25-query sample below, and the full sweep still runs in the
-    # round-end ritual and in the committed oracle preflight.
+    # round-end ritual and in the committed oracle preflight. After all
+    # 420 builds in one session, no cache may outlive release_persists().
+    from highload_kafka_streams_spark import registry
+
+    spark.catalog.clearCache()
     qs = ent.queries()
     for name, fn in qs.items():
         df = fn(spark, sf_smoke)
         assert df.count() >= 0, name
+    registry.release_persists()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_sampled_queries_run_at_smoke_sf(spark, sf_smoke):

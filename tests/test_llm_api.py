@@ -39,7 +39,9 @@ def test_minhash_near_duplicates_api(spark):
 def test_minhash_signatures_survive_short_and_null_docs(spark):
     """Docs with fewer than n tokens (NULL, empty, 1 or 2 words) get a
     signature instead of failing the job under ANSI element_at; docs with
-    at least n tokens keep the signature their word n-grams define."""
+    at least n tokens keep the signature their word n-grams define.
+    NULL and empty docs never pair, not even with each other; a short doc
+    pairs only with a doc of exactly its text."""
     from highload_kafka_streams_spark.llm.dedup import (
         _MERSENNE,
         N_PERM,
@@ -55,6 +57,8 @@ def test_minhash_signatures_survive_short_and_null_docs(spark):
         (6, "the quick brown fox jumps"),
         (7, "a b c"),
         (8, "a b c a b c"),
+        (9, None),
+        (10, ""),
     ]
     d = spark.createDataFrame(docs, "doc_id long, text string")
     sigs = {r["doc_id"]: list(r["sig"]) for r in api.minhash_signatures(d).collect()}

@@ -114,7 +114,10 @@ def test_container_outputs_rejected(spark):
 
 def test_no_oracle_backed_query_emits_containers(spark, sf_smoke):
     """Schema-level sweep: every oracle-backed query's output must be
-    container-free (cheap — plan analysis only, no job runs)."""
+    container-free. No query is executed, but building all of them is
+    not free (~2.5 min): each ``load_table`` runs a parquet
+    schema-inference job, and the iterative builders run their
+    driver-side loop actions."""
     from highload_kafka_streams_spark.plans.oracle import _reject_container_cols
 
     qs = registry.get_queries()

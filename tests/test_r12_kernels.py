@@ -136,8 +136,7 @@ def test_scoped_persists_released_across_queries(spark, sf_smoke):
     """A sequential multi-query session must not accumulate
     storage-pool residue: every scoped_persist registered by query N is
     unpersisted when query N+1 builds, and release_persists() empties
-    the cache manager at end of session. Uses three queries whose
-    caches are ALL scoped."""
+    the cache manager at end of session."""
     spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
     qs = registry.get_queries()
@@ -145,6 +144,8 @@ def test_scoped_persists_released_across_queries(spark, sf_smoke):
         "q_graph_hits",
         "q_alloc_fifo_inventory",
         "q_er_symspell_match",
+        "q_agg_kmv_setops",
+        "q_customer_rfm",
     ):
         qs[name](spark, sf_smoke).write.format("noop").mode(
             "overwrite"

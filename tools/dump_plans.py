@@ -47,7 +47,6 @@ def main() -> None:
         with open(path, "w") as f:
             f.write(buf.getvalue())
         print(f"wrote {path}", flush=True)
-        spark.catalog.clearCache()
     spark.stop()
 
 
